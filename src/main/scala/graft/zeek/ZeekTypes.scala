@@ -184,7 +184,7 @@ object ZeekTypes {
     }
   }
 
-  /** Type codes for the primitive (boxing-free) UnsafeRow fast path. */
+  /** Type codes for the primitive (boxing-free) columnar write path. */
   final val TcString = 0
   final val TcCount = 1
   final val TcInt = 2
@@ -203,7 +203,7 @@ object ZeekTypes {
     case _                   => TcString // string, enum, addr, subnet, unknown
   }
 
-  /** Boxing-free parsers for the UnsafeRow direct-write path: each returns
+  /** Boxing-free parsers for the columnar write path: each returns
     * the primitive and reports NULL through `lastNull` (one instance per
     * partition reader — single-threaded by construction). Semantics match
     * the boxed [[SliceParser]]s exactly; both are covered by the same
@@ -285,22 +285,29 @@ object ZeekTypes {
     private val setSep: Array[Byte] =
       if (setSepIn.isEmpty) Array(','.toByte) else setSepIn
     def parse(b: Array[Byte], s: Int, e: Int): ArrayData = {
-      if (s >= e || sliceEquals(b, s, e, unset) || sliceEquals(b, s, e, empty))
-        return new GenericArrayData(Array.empty[Any])
       val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+      foreachElem(b, s, e)((es, ee) => out += (if (isMarker(b, es, ee)) null else elemParser(b, es, ee)))
+      new GenericArrayData(out.toArray)
+    }
+    /** Calls `f(start, end)` for each element slice of the cell, in order;
+      * an unset, empty or zero-length cell has no elements. */
+    def foreachElem(b: Array[Byte], s: Int, e: Int)(f: (Int, Int) => Unit): Unit = {
+      if (s >= e || isMarker(b, s, e)) return
       var start = s
       var i = s
       val sep0 = setSep(0)
       while (i <= e) {
         val atSep = i < e && b(i) == sep0 && matchesSep(b, i, e)
         if (i == e || atSep) {
-          out += parseElem(b, start, i)
+          f(start, i)
           start = i + setSep.length
           i = start
         } else i += 1
       }
-      new GenericArrayData(out.toArray)
     }
+    /** An unset or empty marker: an empty array as a cell, NULL as an element. */
+    def isMarker(b: Array[Byte], s: Int, e: Int): Boolean =
+      sliceEquals(b, s, e, unset) || sliceEquals(b, s, e, empty)
     private def matchesSep(b: Array[Byte], i: Int, e: Int): Boolean = {
       if (i + setSep.length > e) return false
       var k = 0
@@ -310,8 +317,5 @@ object ZeekTypes {
       }
       true
     }
-    private def parseElem(b: Array[Byte], s: Int, e: Int): Any =
-      if (sliceEquals(b, s, e, unset) || sliceEquals(b, s, e, empty)) null
-      else elemParser(b, s, e)
   }
 }

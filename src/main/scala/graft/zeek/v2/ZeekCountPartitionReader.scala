@@ -10,9 +10,9 @@ import graft.zeek._
 
 /** Reader for a pushed COUNT(*): counts the split's data lines (blank
   * lines and directives skipped — identical line semantics to the data
-  * readers, via the same [[ZeekLineScanner]]) and emits ONE row with the
+  * reader, via the same [[ZeekLineScanner]]) and emits ONE row with the
   * count. Strict-mode schema validation and the ignore_file_errors
-  * policy behave exactly like a data scan: a mismatched file still
+  * policy are the data scan's own ([[ZeekLineScanner.open]]): a mismatched file still
   * errors a COUNT(*), and an ignored bad file contributes zero. */
 final class ZeekCountPartitionReader(
     spec: ZeekFileSpec,
@@ -30,23 +30,10 @@ final class ZeekCountPartitionReader(
     if (done) return false
     done = true
     var n = 0L
-    val hasData =
-      try {
-        val ok = scanner.init()
-        if (ok) {
-          // validation only: per-file schema check / union mapping, with
-          // an empty projection (throws on mismatch exactly like a scan)
-          new ZeekProjection(spec, boundHeader, dataSchema, opts,
-            new StructType(), scanner.fileHeader)
-        }
-        ok
-      } catch {
-        case e: Exception if opts.ignoreFileErrors => false
-        case e: ZeekFormatException => throw e
-        case e: Exception =>
-          throw new ZeekFormatException(s"Failed to read Zeek log '${spec.path}': ${e.getMessage}")
-      }
-    if (hasData) while (scanner.nextDataLine()) n += 1
+    // validation only: per-file schema check / union mapping, with an
+    // empty projection (throws on mismatch exactly like a scan)
+    if (scanner.open(boundHeader, dataSchema, new StructType()).isDefined)
+      while (scanner.nextDataLine()) n += 1
     row = new GenericInternalRow(Array.fill[Any](nCounts)(n))
     true
   }

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableCatalog, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
@@ -45,18 +45,19 @@ final class SerializableConf(@transient var value: Configuration) extends Serial
 class ZeekDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "zeek"
 
-  /** Strict for reads — a pattern matching no files is an error
-    * (reference: src/zeek_scanner.cpp:446-453) — EXCEPT that the no-files
-    * case returns an empty sentinel schema: DataFrameWriter resolves the
-    * table through inferSchema before a write, and a sink must be able to
-    * target a directory that does not hold logs yet. Reads of such a
-    * target still fail with the same error, at scan planning (the same
-    * point the reference errors: its table function binds at query
-    * time). All other bind errors (corrupt headers etc.) stay load-time. */
+  /** Strict for reads: a pattern matching no files fails the load with
+    * the reference's bind error (src/zeek_scanner.cpp:446-453), like
+    * every other bind error. DataFrame and stream writers never call
+    * this — they hand [[getTable]] the query's schema. The one write that
+    * does is a catalog `CREATE TABLE … USING zeek` without columns (its
+    * options carry the catalog's `provider` property): over a directory
+    * that holds no logs yet it gets the empty sentinel schema, so a first
+    * `INSERT INTO` can land (see [[ZeekTable.schema]]). */
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     try ZeekDataSource.bind(options).schema
     catch {
-      case e: ZeekFormatException if e.getMessage.startsWith("No files found") =>
+      case e: ZeekFormatException
+          if ZeekDataSource.noFiles(e) && options.containsKey(TableCatalog.PROP_PROVIDER) =>
         new StructType()
     }
 
@@ -85,6 +86,9 @@ object ZeekDataSource {
     * follows a write in the same TTL window re-lists the directory
     * instead of planning against deleted/stale part files. */
   def clearBindCache(): Unit = cache.synchronized(cache.clear())
+
+  /** The bind error of a pattern that matches no files. */
+  def noFiles(e: ZeekFormatException): Boolean = e.getMessage.startsWith("No files found")
 
   def bind(options: CaseInsensitiveStringMap): ZeekBind = {
     val key = options.asCaseSensitiveMap().asScala.toMap
@@ -115,12 +119,13 @@ object ZeekDataSource {
   }
 }
 
-/** Binds lazily: reads resolve files/schema at scan planning (cached —
-  * see [[ZeekDataSource.bind]]); writes never bind, they only need the
-  * write schema ([[ZeekWriteBuilder]]).
+/** Binds lazily: a read resolves files/schema when Spark first asks for
+  * them (cached — see [[ZeekDataSource.bind]]); writes never bind, they
+  * only need the write schema ([[ZeekWriteBuilder]]).
   *
   * Write schema resolution: while the table schema is the empty sentinel
-  * (fresh target directory, no declared schema) ACCEPT_ANY_SCHEMA lets
+  * (a catalog table created without columns over a directory with no
+  * logs yet) ACCEPT_ANY_SCHEMA lets
   * the query's own schema through; once a real schema exists (log
   * headers, or a catalog declaration) Spark's output resolver validates
   * appends against it — `INSERT INTO` renames positionally to the
@@ -132,14 +137,13 @@ class ZeekTable(props: CaseInsensitiveStringMap,
     extends Table with SupportsRead with org.apache.spark.sql.connector.catalog.SupportsWrite {
   private lazy val bind = ZeekDataSource.bind(props)
   override def name(): String = s"zeek(${Option(props.get("path")).getOrElse("?")})"
-  override def schema(): StructType =
-    provided.filter(_.nonEmpty).getOrElse {
+  override def schema(): StructType = provided match {
+    case Some(declared) if declared.nonEmpty => declared
+    case Some(_) => // a catalog table created without columns: the sentinel until a write lands
       try bind.schema
-      catch { // same sentinel as inferSchema — write relations resolve eagerly
-        case e: ZeekFormatException if e.getMessage.startsWith("No files found") =>
-          new StructType()
-      }
-    }
+      catch { case e: ZeekFormatException if ZeekDataSource.noFiles(e) => new StructType() }
+    case None => bind.schema // read_zeek: binds strictly, like a DataFrame read
+  }
   override def capabilities(): util.Set[TableCapability] = {
     val caps = util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
       TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE, TableCapability.TRUNCATE)
@@ -409,6 +413,11 @@ object ZeekPlanning {
   }
 }
 
+/** Creates the zeek scan's one data reader,
+  * [[ZeekColumnarPartitionReader]], for batch ([[ZeekScan]]) and
+  * streaming ([[ZeekMicroBatchStream]]) scans alike; every scan shape
+  * reads columnar. A pushed COUNT(*) has its own factory
+  * ([[ZeekCountReaderFactory]]) because its output schema differs. */
 final case class ZeekPartitionReaderFactory(
     boundHeader: ZeekHeader,
     dataSchema: StructType,
@@ -418,23 +427,13 @@ final case class ZeekPartitionReaderFactory(
     conf: SerializableConf,
     limit: Int = -1) extends PartitionReaderFactory {
 
-  /** Columnar when every projected column is scalar and no pushed filter
-    * is reader-evaluable: batches amortize the per-row DSv2 virtual-call
-    * cost 4096×, while filtered scans keep the row reader's
-    * parse-filter-columns-first shortcut. The answer depends only on
-    * query-level state, so every partition agrees. */
-  private def columnarOk: Boolean =
-    !"false".equals(System.getProperty("graft.zeek.columnar")) && // A/B switch for benchmarks
-      required.fields.forall(f => !f.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType]) &&
-      !pushed.exists(f => ZeekFilterEval.referencedIfSupported(f).isDefined)
-
-  override def supportColumnarReads(partition: InputPartition): Boolean = columnarOk
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   override def createReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.catalyst.InternalRow] =
-    new ZeekPartitionReader(partition.asInstanceOf[ZeekInputPartition].spec,
-      boundHeader, dataSchema, opts, required, pushed, conf.value, limit)
+    throw new IllegalStateException(
+      "zeek scans are columnar: every partition supports columnar reads, so Spark must call createColumnarReader")
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new ZeekColumnarPartitionReader(partition.asInstanceOf[ZeekInputPartition].spec,
-      boundHeader, dataSchema, opts, required, conf.value, limit)
+      boundHeader, dataSchema, opts, required, pushed, conf.value, limit)
 }

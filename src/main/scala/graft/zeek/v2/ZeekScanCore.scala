@@ -9,14 +9,14 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.zeek._
 
-/** Line-level scan state shared by the row and columnar partition
-  * readers: open (+ decompression sniff), incremental header parse,
-  * ranged-split positioning (a line belongs to the split containing its
-  * first byte), blank/mid-file-directive skipping, and the
-  * ignore_file_errors semantics for read errors.
+/** Line-level scan state shared by the columnar data reader and the
+  * COUNT(*) reader: open (+ decompression sniff), incremental header
+  * parse, ranged-split positioning (a line belongs to the split
+  * containing its first byte), blank/mid-file-directive skipping, and the
+  * ignore_file_errors semantics for open and read errors.
   *
-  * Callers drive it as: `if (!init()) no data` then `while (nextDataLine())
-  * use (buf, lineStart, lineEnd)`.
+  * Callers drive it as: `open(...)` (None = no data) then
+  * `while (nextDataLine()) use (buf, lineStart, lineEnd)`.
   */
 final class ZeekLineScanner(spec: ZeekFileSpec, opts: ZeekOptions,
     conf: Configuration) {
@@ -33,12 +33,30 @@ final class ZeekLineScanner(spec: ZeekFileSpec, opts: ZeekOptions,
   private var rangeEnd: Long = -1L // exclusive; -1 = unbounded
   private var done = false
 
+  /** Open the split and build its projection under the scan's one
+    * open/error policy: an error while opening, reading the header or
+    * validating the file against the bound schema yields no data under
+    * ignore_file_errors, a [[ZeekFormatException]] propagates as is, and
+    * any other error is wrapped as "Failed to read Zeek log '<path>'".
+    * Returns None when this split yields no data. */
+  def open(boundHeader: ZeekHeader, dataSchema: StructType,
+      required: StructType): Option[ZeekProjection] =
+    try {
+      if (!init()) None
+      else Some(new ZeekProjection(spec, boundHeader, dataSchema, opts, required, fileHeader))
+    } catch {
+      case _: Exception if opts.ignoreFileErrors =>
+        close()
+        None
+      case e: ZeekFormatException => throw e
+      case e: Exception =>
+        throw new ZeekFormatException(s"Failed to read Zeek log '${spec.path}': ${e.getMessage}")
+    }
+
   /** Open the file and parse its header. Returns false when this split
     * yields no data (compressed content under a ranged split, an empty
-    * tail, or — for the caller to arrange — errors under
-    * ignore_file_errors). Header/IO errors propagate to the caller, which
-    * applies the ignore_file_errors policy around init(). */
-  def init(): Boolean = {
+    * tail). Header/IO errors propagate to [[open]]. */
+  private def init(): Boolean = {
     if (spec.start > 0) {
       // ranged split of an uncompressed file: parse + validate the header
       // from offset 0 first (cheap — a few KB) so an invalid or
@@ -140,10 +158,10 @@ final class ZeekLineScanner(spec: ZeekFileSpec, opts: ZeekOptions,
   }
 }
 
-/** Per-column projection plan shared by the row and columnar readers:
-  * maps each required output column to its file field (strict-mode
-  * validation or union-by-name), selects its boxed parser / primitive
-  * type code, and owns the reused token-offset arrays. */
+/** Per-column projection plan of a scan: maps each required output
+  * column to its file field (strict-mode validation or union-by-name),
+  * selects its boxed parser / primitive type code, and owns the reused
+  * token-offset arrays. */
 final class ZeekProjection(spec: ZeekFileSpec, boundHeader: ZeekHeader,
     dataSchema: StructType, opts: ZeekOptions, required: StructType,
     fileHeader: ZeekHeader) {
@@ -174,7 +192,7 @@ final class ZeekProjection(spec: ZeekFileSpec, boundHeader: ZeekHeader,
   val srcIdx = new Array[Int](nReq)
   val scalarParsers = new Array[ZeekTypes.SliceParser](nReq)
   val listParsers = new Array[ZeekTypes.ListParser](nReq)
-  /** ZeekTypes.Tc* per required column (scalar columns only) */
+  /** ZeekTypes.Tc* per required column (the element type for list columns) */
   val typeCodes = new Array[Int](nReq)
   val filenameValue: UTF8String = UTF8String.fromString(ZeekIO.displayPath(spec.path))
 
@@ -198,6 +216,7 @@ final class ZeekProjection(spec: ZeekFileSpec, boundHeader: ZeekHeader,
               ZeekTypes.parserFor(ZeekTypes.innerType(zt)),
               fileHeader.setSeparator.getBytes(StandardCharsets.UTF_8),
               unsetBytes, emptyBytes)
+            typeCodes(i) = ZeekTypes.typeCodeFor(ZeekTypes.innerType(zt))
           case _ =>
             scalarParsers(i) = ZeekTypes.parserFor(zt)
             typeCodes(i) = ZeekTypes.typeCodeFor(zt)
@@ -207,15 +226,15 @@ final class ZeekProjection(spec: ZeekFileSpec, boundHeader: ZeekHeader,
     }
   }
 
-  /** Tokens needed per line: no reader path touches a token past the
-    * largest projected file-field index (parseCol/writeDirect/the
-    * columnar reader all index through srcIdx, and pushed-filter columns
-    * resolve through `required` too), so tokenization stops there. On an
-    * ultra-wide log with a narrow early projection this skips the tail
-    * separator scan of every line — see tools/WideLogProbe for the
-    * measured profile. Lines SHORTER than the cap keep their semantics:
-    * nTok comes back smaller and absent fields stay NULL, exactly as
-    * with the full scan. */
+  /** Tokens needed per line: the reader never touches a token past the
+    * largest projected file-field index (parseCol and the columnar fill
+    * both index through srcIdx, and pushed-filter columns resolve through
+    * `required` too), so tokenization stops there. On an ultra-wide log
+    * with a narrow early projection this skips the tail separator scan of
+    * every line — the `zeek_v2.wide_*` legs of perfbench's scan ladder
+    * measure it. Lines SHORTER than the cap keep their semantics: nTok
+    * comes back smaller and absent fields stay NULL, exactly as with the
+    * full scan. */
   val nTokNeeded: Int = {
     var mx = 0
     var i = 0
@@ -244,15 +263,15 @@ final class ZeekProjection(spec: ZeekFileSpec, boundHeader: ZeekHeader,
     nTok
   }
 
-  /** Boxed single-column parse (filter eval + generic row path). */
+  /** Boxed single-column parse for pushed-filter evaluation; scalar
+    * columns only, as no filter on a list column is pushed
+    * ([[ZeekFilterEval.pushableType]]). */
   def parseCol(c: Int, buf: Array[Byte], nTok: Int): Any = {
     val si = srcIdx(c)
     if (si == -2) return filenameValue
     if (si < 0 || si >= nTok) return null // absent in this file (union mode) → NULL
     val s = tokStart(si)
     val e = tokEnd(si)
-    val lp = listParsers(c)
-    if (lp != null) return lp.parse(buf, s, e)
     if (ZeekTypes.sliceEquals(buf, s, e, unsetBytes) ||
         ZeekTypes.sliceEquals(buf, s, e, emptyBytes)) null
     else scalarParsers(c)(buf, s, e)

@@ -178,12 +178,16 @@ class ZeekAnalyticsSpec extends AnyFunSuite {
     assert(norm < 100000L)
   }
 
-  test("dhcp lease churn: per-device address stability from the reference's dhcp.log") {
+  private val refData = "/root/reference/data"
+  private def have = new java.io.File(refData).isDirectory
+
+  /** Device tracking over dhcp.log: per MAC, how many leases, does the
+    * device keep its address, how many ACKed handshakes, how many
+    * connections — list (set/vector) columns in an analytics aggregate.
+    * Value: (leases, distinct assigned addresses, ACKs, connections). */
+  private def leaseChurn(path: String): Map[String, (Long, Long, Long, Long)] = {
     import org.apache.spark.sql.types._
-    // device-tracking workflow: how many leases per MAC, does the
-    // device keep its address, how many full DORA handshakes — list
-    // (set/vector) columns exercised in an analytics aggregate
-    val got = spark.read.format("zeek").load("/root/reference/data/dhcp.log.gz")
+    spark.read.format("zeek").load(path)
       .filter(col("mac").isNotNull)
       .groupBy(col("mac"))
       .agg(count(lit(1)).as("n_leases"),
@@ -193,10 +197,12 @@ class ZeekAnalyticsSpec extends AnyFunSuite {
       .collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
       .toMap
+  }
 
-    // independent oracle: gunzip + parse the TSV directly
+  /** Independent oracle for [[leaseChurn]]: gunzip + parse the TSV directly. */
+  private def leaseChurnOracle(path: String): Map[String, (Long, Long, Long, Long)] = {
     val src = scala.io.Source.fromInputStream(new java.util.zip.GZIPInputStream(
-      new java.io.FileInputStream("/root/reference/data/dhcp.log.gz")))
+      new java.io.FileInputStream(path)))
     val acc = scala.collection.mutable.Map.empty[String, (Long, Set[String], Long, Long)]
     try src.getLines().filterNot(_.startsWith("#")).foreach { line =>
       val c = line.split("\t", -1)
@@ -210,19 +216,51 @@ class ZeekAnalyticsSpec extends AnyFunSuite {
         acc(mac) = (prev._1 + 1, addrs, acks, conns)
       }
     } finally src.close()
-    assert(got.size == acc.size, s"${got.size} macs vs oracle ${acc.size}")
-    for ((mac, (n, addrs, acks, conns)) <- acc)
-      assert(got(mac) == ((n, addrs.size.toLong, acks, conns)),
-        s"mac $mac: got ${got(mac)} expected ${(n, addrs.size, acks, conns)}")
+    acc.map { case (mac, (n, addrs, acks, conns)) => mac -> ((n, addrs.size.toLong, acks, conns)) }.toMap
   }
 
-  test("asset inventory across the reference's 24-hour known_hosts rotation matches an independent parse") {
+  test("dhcp lease churn: per-device address stability over a planted dhcp.log") {
+    // laptop: 4 leases, one address, every handshake ACKed, one conn each;
+    // phone: 3 leases on 3 addresses, one NAK, uids as a pair / (empty) /
+    // one; probe: 2 DISCOVERs that never got an address; plus a lease
+    // with an unset MAC, which the aggregate skips
+    def lease(i: Int, uids: String, mac: String, assigned: String, msgs: String) =
+      ZeekFixtures.row(s"${t0 + 600L * i}.125000", uids, assigned, "10.0.0.1", mac, "-", "-",
+        "lan", "-", assigned, "86400.000000", "-", "-", msgs, "0.010000")
+    val dora = "DISCOVER,OFFER,REQUEST,ACK"
+    val log = ZeekFixtures.header("dhcp", ZeekFixtures.dhcpFields, ZeekFixtures.dhcpTypes) +
+      lease(0, "Ca1", "aa:aa:aa:00:00:01", "10.0.0.10", dora) +
+      lease(1, "Cb1,Cb2", "bb:bb:bb:00:00:02", "10.0.0.20", dora) +
+      lease(2, "-", "cc:cc:cc:00:00:03", "-", "DISCOVER") +
+      lease(3, "Ca2", "aa:aa:aa:00:00:01", "10.0.0.10", "REQUEST,ACK") +
+      lease(4, "(empty)", "bb:bb:bb:00:00:02", "10.0.0.21", "REQUEST,NAK") +
+      lease(5, "Cx1", "-", "10.0.0.99", dora) +
+      lease(6, "Ca3", "aa:aa:aa:00:00:01", "10.0.0.10", "REQUEST,ACK") +
+      lease(7, "Cb3", "bb:bb:bb:00:00:02", "10.0.0.22", dora) +
+      lease(8, "-", "cc:cc:cc:00:00:03", "-", "-") +
+      lease(9, "Ca4", "aa:aa:aa:00:00:01", "10.0.0.10", "REQUEST,ACK")
+    val path = ZeekFixtures.write(ZeekFixtures.tempDir(), "dhcp.log.gz", log, gzip = true)
+    val got = leaseChurn(path)
+    assert(got == Map(
+      "aa:aa:aa:00:00:01" -> ((4L, 1L, 4L, 4L)),
+      "bb:bb:bb:00:00:02" -> ((3L, 3L, 2L, 3L)),
+      "cc:cc:cc:00:00:03" -> ((2L, 0L, 0L, 0L))))
+    assert(got == leaseChurnOracle(path))
+  }
+
+  test("dhcp lease churn: per-device address stability from the reference's dhcp.log") {
+    assume(have)
+    val path = s"$refData/dhcp.log.gz"
+    assert(leaseChurn(path) == leaseChurnOracle(path))
+  }
+
+  /** The analyst workflow a rotated-log deployment runs daily: glob the
+    * whole day, first/last-seen + activity per host, provenance via the
+    * filename column. Value: (records, first µs, last µs, conns opened,
+    * files). */
+  private def inventory(dir: String): Map[String, (Long, Long, Long, Long, Long)] = {
     import org.apache.spark.sql.types._
-    // the analyst workflow a rotated-log deployment runs daily: glob the
-    // whole day, first/last-seen + activity per host, provenance via the
-    // filename column — against the reference's OWN fixture files
-    val glob = "/root/reference/data/known_hosts_*.log.gz"
-    val inv = spark.read.format("zeek").option("filename", "true").load(glob)
+    spark.read.format("zeek").option("filename", "true").load(s"$dir/known_hosts_*.log.gz")
       .groupBy(col("host_ip"))
       .agg(count(lit(1)).as("n_records"),
         min(unix_micros(col("ts"))).as("first_us"),
@@ -232,9 +270,11 @@ class ZeekAnalyticsSpec extends AnyFunSuite {
       .collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))))
       .toMap
+  }
 
-    // independent oracle: gunzip + parse the TSVs directly
-    val files = new java.io.File("/root/reference/data").listFiles()
+  /** Independent oracle for [[inventory]]: gunzip + parse the TSVs directly. */
+  private def inventoryOracle(dir: String): Map[String, (Long, Long, Long, Long, Long)] = {
+    val files = new java.io.File(dir).listFiles()
       .filter(_.getName.matches("known_hosts_.*\\.log\\.gz")).sortBy(_.getName)
     assert(files.length == 24, s"expected the 24 hourly files, got ${files.length}")
     def tsMicros(s: String): Long = {
@@ -253,11 +293,37 @@ class ZeekAnalyticsSpec extends AnyFunSuite {
           prev._3 + conns, prev._4 + 1, prev._5 + f.getName)
       } finally src.close()
     }
-    assert(inv.size == acc.size, s"${inv.size} hosts vs oracle ${acc.size}")
-    for ((host, (first, last, conns, n, fileSet)) <- acc) {
-      val got = inv(host)
-      assert(got == ((n, first, last, conns, fileSet.size.toLong)),
-        s"host $host: got $got expected ${(n, first, last, conns, fileSet.size)}")
+    acc.map { case (host, (first, last, conns, n, fileSet)) =>
+      host -> ((n, first, last, conns, fileSet.size.toLong)) }.toMap
+  }
+
+  test("asset inventory across a planted 24-hour known_hosts rotation") {
+    // server: seen every hour, opening h+1 conns in hour h; workstation:
+    // hours 8-17, 5 conns each; visitor: two records in hour 12 only
+    val dir = ZeekFixtures.tempDir()
+    def host(h: Int, i: Int, ip: String, conns: Int) =
+      ZeekFixtures.row(s"${t0 + 3600L * h + 60L * i}.250000", "3600.000000", f"K$h%02d$i",
+        ip, if (i == 0) "10" else "-", "-", conns.toString, conns.toString, "0", "0",
+        if (i == 0) "server,dns" else "(empty)", f"C$h%02d$i", "12.500000")
+    for (h <- 0 until 24) {
+      val rows = Seq(host(h, 0, "10.0.0.1", h + 1)) ++
+        (if (h >= 8 && h <= 17) Seq(host(h, 1, "10.0.0.2", 5)) else Nil) ++
+        (if (h == 12) Seq(host(h, 2, "10.0.0.3", 1), host(h, 3, "10.0.0.3", 2)) else Nil)
+      ZeekFixtures.write(dir, f"known_hosts_20260116_$h%02d.00.00-${h + 1}%02d.00.00-0500.log.gz",
+        ZeekFixtures.header("known_hosts", ZeekFixtures.knownHostsFields,
+          ZeekFixtures.knownHostsTypes) + rows.mkString, gzip = true)
     }
+    def us(h: Int, i: Int) = (t0 + 3600L * h + 60L * i) * 1000000L + 250000L
+    val inv = inventory(dir.toString)
+    assert(inv == Map(
+      "10.0.0.1" -> ((24L, us(0, 0), us(23, 0), 300L, 24L)),
+      "10.0.0.2" -> ((10L, us(8, 1), us(17, 1), 50L, 10L)),
+      "10.0.0.3" -> ((2L, us(12, 2), us(12, 3), 3L, 1L))))
+    assert(inv == inventoryOracle(dir.toString))
+  }
+
+  test("asset inventory across the reference's 24-hour known_hosts rotation matches an independent parse") {
+    assume(have)
+    assert(inventory(refData) == inventoryOracle(refData))
   }
 }

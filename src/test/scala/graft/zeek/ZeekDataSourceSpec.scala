@@ -268,12 +268,12 @@ class ZeekDataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("empty glob errors") {
-    // at query planning — the point the reference's table function binds
-    // (load() alone can't error anymore: the writer resolves the table
-    // through the same path and must accept a not-yet-existing target)
+    // at load, with the reference's bind error — not an empty-schema
+    // relation whose first column reference fails to resolve
     val dir = ZeekFixtures.tempDir()
-    val e = intercept[Exception](read(s"$dir/*.log").count())
-    assert(e.getMessage.contains("No files found"))
+    val e = intercept[ZeekFormatException](
+      read(s"$dir/*.log.gz").filter(col("mac").isNotNull).collect())
+    assert(e.getMessage.startsWith("No files found that match the pattern"), e.getMessage)
   }
 
   test("filter pushdown: results identical to post-scan semantics") {

@@ -65,6 +65,21 @@ object ZeekFixtures {
         "tcp", "45.25", "18446744073709551615", "42", "true", "0.0", "g,-,h", "1.0,-,3.5") +
       "#close\t2026-01-22-02-30-59\n"
 
+  /** dhcp.log schema (FIXTURES.md): a set[string] and a vector[string]
+    * column among mostly-unset fields. */
+  val dhcpFields = Seq("ts", "uids", "client_addr", "server_addr", "mac", "host_name",
+    "client_fqdn", "domain", "requested_addr", "assigned_addr", "lease_time",
+    "client_message", "server_message", "msg_types", "duration")
+  val dhcpTypes = Seq("time", "set[string]", "addr", "addr", "string", "string", "string",
+    "string", "addr", "addr", "interval", "string", "string", "vector[string]", "interval")
+
+  /** known_hosts.log schema (FIXTURES.md), rotated hourly. */
+  val knownHostsFields = Seq("ts", "duration", "kuid", "host_ip", "host_vlan",
+    "host_inner_vlan", "conns_opened", "conns_closed", "conns_pending", "long_conns",
+    "annotations", "last_active_session", "last_active_interval")
+  val knownHostsTypes = Seq("time", "interval", "string", "addr", "int", "int", "count",
+    "count", "count", "count", "vector[string]", "string", "interval")
+
   /** Base 3-column schema used by the schema-variation fixtures. */
   def base(pathName: String, rows: Seq[(String, String, String)]): String =
     header(pathName, Seq("ts", "id", "value"), Seq("time", "string", "count")) +

@@ -3,9 +3,8 @@ package graft.zeek
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Limit pushdown through both reader paths: partitions stop reading
-  * after n post-filter rows (LocalLimit semantics — Spark still applies
-  * the global limit). */
+/** Limit pushdown: partitions stop reading after n post-filter rows
+  * (LocalLimit semantics — Spark still applies the global limit). */
 class ZeekLimitSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
 
@@ -25,7 +24,7 @@ class ZeekLimitSpec extends AnyFunSuite {
     assert(df.limit(5000).count() == 1000) // limit above total: everything
   }
 
-  test("limit composes with pushed filters (row path)") {
+  test("limit composes with pushed filters (filter-first path)") {
     val glob = corpus()
     val df = spark.read.format("zeek").load(glob)
     val got = df.filter(col("value") > 100).limit(9).collect()

@@ -67,22 +67,55 @@ class ZeekPlanTimeSpec extends AnyFunSuite {
       s"planning opened ${CountingLocalFs.openCalls.get} files")
   }
 
-  test("columnar and row readers produce identical results (kept-in-sync guard)") {
-    // the per-cell parse logic exists in writeDirect (row) and writeRow
-    // (columnar); this pins them bit-identical over every scalar type,
-    // NULL markers, and malformed cells so a change to one copy cannot
-    // silently diverge the other
+  test("columnar reader: literal rows for every cell shape, filtered or not") {
+    // every scalar type, both NULL markers, a malformed cell (a count
+    // above Long.MaxValue), list cells with NULL elements and the
+    // filename column, read with and without a pushed filter evaluated
+    // before the rest of the row is parsed
+    val dir = ZeekFixtures.tempDir()
+    val path = ZeekFixtures.write(dir, "conn.log", ZeekFixtures.connContent)
+    val df = spark.read.format("zeek").option("filename", "true").load(path)
+    def ts(sec: Long, micros: Long) = java.time.Instant.ofEpochSecond(sec, micros * 1000)
+    def secs(s: Double) = java.time.Duration.ofNanos((s * 1e9).round)
+    def norm(v: Any): Any = v match {
+      case t: java.sql.Timestamp => t.toInstant
+      case s: scala.collection.Seq[_] => s.map(norm).toList
+      case other => other
+    }
+    val expected = Seq(
+      List(ts(1768539602L, 60078), "CAcq1P2phfnCTjZAHl", "192.168.10.5", 54321, "8.8.8.8", 53,
+        "udp", secs(0.062826), 61L, -3L, true, 1.5, List("alpha", "beta"),
+        List(secs(0.01), secs(0.02)), path),
+      List(ts(1768539602L, 166619), "CmFsdZ2rTGf6Ouv2R6", "192.168.10.5", 54322, "8.8.4.4", 53,
+        "udp", null, null, 7L, false, null, Nil, Nil, path),
+      List(ts(1768539603L, 500000), "Cxxg3H3AN8vkRYeSE6", "10.0.0.1", 443, "2001:4860:4860::8888",
+        65535, "tcp", secs(45.25), null, 42L, true, 0.0, List("g", null, "h"),
+        List(secs(1.0), null, secs(3.5)), path))
+    def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toSeq.map(norm).toList).toSeq
+    assert(rows(df) == expected)
+    assert(rows(df.filter(col("proto") === "udp")) == expected.take(2))
+    assert(rows(df.filter(col("pkts") > 0L && col("id_resp_p") === 65535)) == expected.drop(2))
+  }
+
+  test("every scan shape plans ColumnarToRow over the zeek BatchScan") {
+    import org.apache.spark.sql.execution.ColumnarToRowExec
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     val dir = ZeekFixtures.tempDir()
     ZeekFixtures.write(dir, "conn.log", ZeekFixtures.connContent)
-    def read(columnar: Boolean) = {
-      System.setProperty("graft.zeek.columnar", columnar.toString)
-      try {
-        // drop the list columns so BOTH paths are eligible
-        val df = spark.read.format("zeek").option("filename", "true").load(s"$dir/conn.log")
-        df.drop("tags", "rtts").collect().map(_.toString).sorted.toSeq
-      } finally System.clearProperty("graft.zeek.columnar")
+    val df = spark.read.format("zeek").option("filename", "true").load(s"$dir/*.log")
+    val shapes = Seq(
+      "filtered" -> df.filter(col("proto") === "tcp"),
+      "list" -> df.select("uid", "tags", "rtts"),
+      "filename" -> df.filter(col("filename").endsWith("conn.log")).select("filename", "uid"))
+    for ((shape, q) <- shapes) {
+      val plan = q.queryExecution.executedPlan
+      val columnar = plan.collect { case c: ColumnarToRowExec => c }.exists(_.find {
+        case b: BatchScanExec => b.scan.isInstanceOf[ZeekScan]
+        case _ => false
+      }.isDefined)
+      assert(columnar, s"$shape scan:\n$plan")
+      assert(q.collect().nonEmpty, shape)
     }
-    assert(read(columnar = true) == read(columnar = false))
   }
 
   test("pushed COUNT(*) sums byte-range split partials exactly") {

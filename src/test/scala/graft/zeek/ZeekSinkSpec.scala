@@ -308,6 +308,15 @@ class ZeekSinkSpec extends AnyFunSuite {
     } finally spark.sql("DROP TABLE zeek_sql_sink")
   }
 
+  test("SQL DDL without columns: the first INSERT sets the schema") {
+    val out = ZeekFixtures.tempDir().resolve("fresh")
+    spark.sql(s"CREATE TABLE zeek_sql_nocols USING zeek OPTIONS (path '$out')")
+    try {
+      spark.sql("INSERT INTO zeek_sql_nocols SELECT 1L AS n, 'a' AS s")
+      assert(spark.table("zeek_sql_nocols").collect().map(_.toString).toSeq == Seq("[1,a]"))
+    } finally spark.sql("DROP TABLE zeek_sql_nocols")
+  }
+
   test("scalar strings equal to the unset/empty markers are escaped like zeek's writer") {
     // "-" / "(empty)" as VALUES would re-read as NULL / "" — silent
     // corruption; zeek's ascii writer hex-escapes the first char, so do we
